@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Is this query's timed action safe as `count()`, or must it be FORCED
     * (`toRdd.foreach`)? Decided on the OPTIMIZED LOGICAL plan, not the
@@ -10,8 +11,8 @@ object Bench {
     * surface). The logical tree always carries the reducing operators.
     * Top-level Sorts are the presentation orderBy every declared query
     * ends in — count() prunes them (so they never contributed to counted
-    * rows) and the forcing action executes them (same protocol as
-    * ProbeForce, whose numbers SCALING.md already carries); they are
+    * rows) and the forcing action executes them (the forced protocol
+    * whose numbers SCALING.md carries); they are
     * stripped before the reducing-operator test, while a non-top Sort
     * stays reducing. Contract spec-pinned in BenchModeSpec. */
   private[graft] def isMapOnly(
@@ -29,17 +30,87 @@ object Bench {
       .exists(n => reducing.exists(n.contains))
   }
 
+  /** One query's bench row: the median-of-3 seconds, or the error when
+    * any run threw — a query that failed is never timed. */
+  private[graft] final case class Timing(name: String, forced: Boolean,
+                                         result: Either[String, Double])
+
+  /** Times every query in `selected` (median of 3 runs each) on `spark`.
+    * Median of 3: single-run numbers swing ±30% with machine load, which
+    * is larger than most real plan differences.
+    *
+    * Forcing action (VERDICT r10 #2): count() lets Catalyst prune a
+    * MAP-ONLY query (scan + project/filter/generate — no aggregate, join,
+    * sort, window, or exchange anywhere in the physical plan) down to a
+    * scan row-count, so its bench row measures the scan, not the
+    * computation (q_winnow: 0.14 s counted vs 42.6 s forced at 100×).
+    * Such plans are timed under queryExecution.toRdd.foreach instead —
+    * every projected column is actually produced. Queries with any
+    * reducing operator keep count() so rows stay comparable with every
+    * prior round's artifact; their expensive operators sit below the
+    * count and cannot be pruned away wholesale. */
+  private[graft] def timeQueries(
+      spark: SparkSession, sfDir: String,
+      selected: Map[String, (SparkSession, String) => DataFrame],
+      keepRdds: Set[Int]): Seq[Timing] =
+    selected.toSeq.map { case (name, fn) =>
+      // mode decided on the first run's own plan (inside its timed region,
+      // where fn construction has always lived) — no extra fn() call:
+      // several families materialize probe snapshots eagerly at
+      // construction and an untimed extra build would double their wall
+      var forced = false
+      var error: Option[String] = None
+      val times = scala.collection.mutable.ArrayBuffer[Double]()
+      // stop at the first failure: the remaining runs would time a failure
+      while (times.size < 3 && error.isEmpty) {
+        val t0 = System.nanoTime()
+        try {
+          val df = fn(spark, sfDir)
+          if (times.isEmpty) forced = isMapOnly(df.queryExecution)
+          if (forced) df.queryExecution.toRdd.foreach(_ => ())
+          else df.count(): Unit
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable => error = Some(s"${e.getClass.getName}: ${e.getMessage}") }
+      }
+      // Between queries (never inside a timed region): drop the scratch
+      // state this query leaked so later queries aren't taxed by it —
+      // round 6 measured untouched queries 2-4× slower late in the
+      // 98-query session than standalone (VERDICT r6 finding 2).
+      graft.util.SessionHygiene.scrub(spark, keepRdds, gc = true)
+      error.foreach(e => System.err.println(s"[bench] $name status:error $e"))
+      Timing(name, forced, error.toLeft(times.sorted.apply(1)))
+    }
+
+  // 4-decimal seconds: sub-0.1ms digits are noise and more than double the
+  // line length, which is what got stdout captures truncated mid-JSON in
+  // rounds 1-3 (BENCH parsed: null).
+  private def fmt(v: Double): String =
+    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def jsonNames(names: Seq[String]): String =
+    names.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The full per-query record (the final stdout line). "forced": rows
+    * timed under toRdd.foreach (map-only plans) — NOT comparable with a
+    * prior round's counted row for the same query. "failed": queries that
+    * threw; they carry no time and count toward no total. */
+  private[graft] def resultJson(timings: Seq[Timing], calibration: Double,
+                                sfDir: String): String = {
+    val timed = timings.flatMap(t => t.result.toOption.map(t.name -> _))
+    val qs = timed.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val forcedJson = jsonNames(timings.filter(t => t.forced && t.result.isRight).map(_.name))
+    val failedJson = jsonNames(timings.filter(_.result.isLeft).map(_.name))
+    s"""{"metric":"total","value":${fmt(timed.map(_._2).sum)},"unit":"sec","calibration":${fmt(calibration)},"forced":$forcedJson,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional comma-separated subset for local iteration
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // SPARK_GRAFT_SCRUB=0 disables between-query session scrubbing (A/B
-    // profiling of the accumulation tax); SPARK_GRAFT_PROFILE=1 prints a
-    // session-state JSON line to stderr after each query.
-    val scrub = !sys.env.get("SPARK_GRAFT_SCRUB").contains("0")
-    val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
     val spark = graft.util.Sessions.build("graft-bench", cpus)
     // Warm-up: touch every table once (FS metadata, codegen, JIT) so the
     // first measured query doesn't absorb one-time session costs.
@@ -64,60 +135,11 @@ object Bench {
     val selected =
       if (subset.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => subset(n) }
-    // Median of 3 runs per query: single-run numbers swing ±30% with
-    // machine load, which is larger than most real plan differences.
-    //
-    // Forcing action (VERDICT r10 #2): count() lets Catalyst prune a
-    // MAP-ONLY query (scan + project/filter/generate — no aggregate,
-    // join, sort, window, or exchange anywhere in the physical plan) down
-    // to a scan row-count, so its bench row measures the scan, not the
-    // computation (q_winnow: 0.14 s counted vs 42.6 s forced at 100×).
-    // Such plans are timed under queryExecution.toRdd.foreach instead —
-    // every projected column is actually produced. Queries with any
-    // reducing operator keep count() so rows stay comparable with every
-    // prior round's artifact; their expensive operators sit below the
-    // count and cannot be pruned away wholesale.
-    val forcedSet = scala.collection.mutable.Set[String]()
-    val results = selected.map { case (name, fn) =>
-      // mode decided on the first run's own plan (inside its timed region,
-      // where fn construction has always lived) — no extra fn() call:
-      // several families materialize probe snapshots eagerly at
-      // construction and an untimed extra build would double their wall
-      var forced = false
-      val times = (0 until 3).map { i =>
-        val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          if (i == 0) forced = isMapOnly(df.queryExecution)
-          if (forced) df.queryExecution.toRdd.foreach(_ => ())
-          else df.count(): Unit
-        } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      if (forced) forcedSet += name
-      // Between queries (never inside a timed region): drop the scratch
-      // state this query leaked so later queries aren't taxed by it —
-      // round 6 measured untouched queries 2-4× slower late in the
-      // 98-query session than standalone (VERDICT r6 finding 2).
-      if (scrub) graft.util.SessionHygiene.scrub(spark, keepRdds, gc = true)
-      if (profile)
-        System.err.println(graft.util.SessionHygiene.stateLine(spark, name) +
-          s""" after ${name}=${times(1)}""")
-      name -> times(1)
-    }
-    // 4-decimal seconds: sub-0.1ms digits are noise and more than double the
-    // line length, which is what got the driver's stdout capture truncated
-    // mid-JSON in rounds 1-3 (BENCH parsed: null).
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // "forced": rows timed under toRdd.foreach (map-only plans) — NOT
-    // comparable with a prior round's counted row for the same query
-    val forcedJson = forcedSet.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calibration":${fmt(calibration)},"forced":$forcedJson,"queries":$qs,"sf":"$sfDir"}"""
+    val timings = timeQueries(spark, sfDir, selected, keepRdds)
+    val failed = timings.filter(_.result.isLeft).map(_.name)
+    val results = timings.flatMap(t => t.result.toOption.map(t.name -> _)).toMap
+    val forcedSet = timings.filter(_.forced).map(_.name).toSet
+    val json = resultJson(timings, calibration, sfDir)
     // Persist the full record to a file so per-round comparisons never need
     // stdout forensics. Line order (r15, VERDICT r14 #2/what's-wrong #4):
     // the SHORT summary prints FIRST and the full per-query line LAST —
@@ -128,9 +150,13 @@ object Bench {
     // target/bench.json still holds the full record.
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), json + "\n")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir","queries_file":"target/bench.json"}""")
+    println(s"""{"metric":"total","value":${fmt(results.values.sum)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir","queries_file":"target/bench.json"}""")
     println(json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAIL: ${failed.size} quer${if (failed.size == 1) "y" else "ies"} threw: ${failed.sorted.mkString(",")}")
+      sys.exit(2)
+    }
     // Regression gate (VERDICT r7 #7, normalization r8 #5): with
     // SPARK_GRAFT_BENCH_REF set to a prior round's artifact, any common
     // query slower than its prior time by the gate factor (plus a 0.2 s

@@ -1,9 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Writes each query in `selected` to `$outDir/<name>` as one parquet
+    * file and returns the names of the queries that threw. Each query's
+    * directory is deleted first, so a query that fails leaves no earlier
+    * run's output behind for the oracle compare to pass. */
+  private[graft] def dumpQueries(
+      spark: SparkSession, sfDir: String, outDir: String,
+      selected: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
+    selected.toSeq.flatMap { case (name, fn) =>
+      val dir = new java.io.File(s"$outDir/$name")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      val failed =
+        try {
+          fn(spark, sfDir).coalesce(1).write.parquet(dir.getPath)
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          org.apache.commons.io.FileUtils.deleteDirectory(dir) // no partial output
+          Some(name)
+        }
+      // storage hygiene between queries: ~100 plans in one session would
+      // otherwise accumulate stray persisted RDDs / cache entries
+      graft.util.SessionHygiene.scrub(spark)
+      failed
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -15,16 +40,7 @@ object Verify {
     val selected =
       if (subset.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => subset(n) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // storage hygiene between queries: ~100 plans in one session would
-      // otherwise accumulate stray persisted RDDs / cache entries
-      graft.util.SessionHygiene.scrub(spark)
-    }
+    val failed = dumpQueries(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,5 +57,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAIL: ${failed.size} of ${selected.size} queries threw: ${failed.sorted.mkString(",")}")
+      sys.exit(2)
+    }
   }
 }

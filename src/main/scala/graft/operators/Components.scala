@@ -160,7 +160,6 @@ object Components {
       rewired
     }
 
-    val profile = sys.env.contains("SPARK_GRAFT_PROFILE")
     // Any failure (including the non-convergence require below) must not
     // strand the in-flight generation persisted with no handle for the
     // caller to release — unwind storage before rethrowing.
@@ -195,7 +194,6 @@ object Components {
       var converged = false
       var it = 0
       while (!converged && it < maxIter) {
-        val t0 = System.nanoTime()
         val next = snap(smallStar(largeStar(cur.df)))
         try {
           val nextSig = edgeSetSig(next.df)
@@ -209,10 +207,6 @@ object Components {
         cur.release() // next is checkpointed by the aggregates above — safe
         cur = next
         it += 1
-        if (profile) println(String.format(java.util.Locale.ROOT,
-          "[cc] round=%d edges=%d sec=%.2f converged=%b",
-          Int.box(it), Long.box(sig._1),
-          Double.box((System.nanoTime() - t0) / 1e9), Boolean.box(converged)))
       }
       require(converged, s"connectedComponents did not converge in $maxIter rounds")
     } catch { case t: Throwable => cur.release(); throw t }

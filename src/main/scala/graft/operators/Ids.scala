@@ -6,19 +6,19 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Scalable deterministic ID assignment (E9 at fact-table scale).
   *
-  * Three tiers, by contract strength vs cost (SURVEY §7.3):
+  * Two tiers, by contract strength vs cost (SURVEY §7.3):
   *
   *   1. `monotonically_increasing_id` — unique, NOT dense, NOT reproducible
   *      across partitioning. O(1)/row, no shuffle. The reference's choice
   *      (`transform.py:197-208`).
-  *   2. [[Transform.addSurrogateKeys]] deterministic mode — dense AND
-  *      reproducible, but a single-partition window: dimension-scale only.
-  *   3. [[denseIds]] below — dense AND reproducible AND distributed:
+  *   2. [[denseIds]] below — dense AND reproducible AND distributed:
   *      range-repartition by the sort key, sort within partitions, then
   *      zipWithIndex (which runs one lightweight count job to compute
   *      partition offsets — no data movement beyond the range shuffle).
   *      This is the 100 TB path: ~2 jobs, no global sort bottleneck, no
-  *      single-task window.
+  *      single-task window. The one dense-id path: `q_surrogate_id` and
+  *      [[graft.ops.Transform.addSurrogateKeys]]'s deterministic mode both
+  *      call it.
   */
 object Ids {
 

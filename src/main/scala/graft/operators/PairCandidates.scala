@@ -178,7 +178,6 @@ object PairCandidates {
 
   private val blockedMemo =
     new java.util.concurrent.ConcurrentHashMap[String, BlockedStats]()
-  private[operators] def blockedMemoSize: Int = blockedMemo.size()
 
   /** [[BlockedStats]] from an UNMATERIALIZED per-(block, k) skeleton plan
     * (columns `block`, `g`) — one aggregate job to a single driver row, no
@@ -265,7 +264,7 @@ object PairCandidates {
     * membership joins cost whole extra corpus scans — measured r8: 1.4–1.6×
     * sf0.1 overhead).
     *
-    * The r9 A/B that motivated this (tools/ProbeJaccardAb, 100× cipher
+    * The r9 A/B that motivated this (SCALING.md, 100× cipher
     * tier): global dup ratio 1.036 — the old ratio gate said direct — yet
     * collapsed ran 109.7 s vs direct's 284.2 s, because clone mass
     * concentrates in a few blocks (short-doc blocks where ciphered word
@@ -274,7 +273,7 @@ object PairCandidates {
     * aggregate over (block, k): clone rows partial-aggregate map-side;
     * nothing data-sized reaches the driver. */
   def shouldCollapseBlocked(keyed: DataFrame): Boolean = {
-    // probe-only entry (specs, dev probes): the skeleton is counts-only and
+    // spec-only entry: the skeleton is counts-only and
     // dropped on exit — production callers go through [[blockedStatsFor]]
     // with a skeleton rich enough to double as their collapse group table
     val key = "bvol#" + keyed.sparkSession.hashCode().toString + "#" +
@@ -300,7 +299,7 @@ object PairCandidates {
     * UNDERSTATES what clones cost the candidate paths: the PPJoin prefix
     * path's (token, id) equi-join grows as Σ_t df_t² and exact-duplicate
     * rows share every token, so the measured 100×-cipher A/B
-    * (tools/ProbeJaccardAb) ran collapsed 2.2× faster than direct (53.9 s
+    * (SCALING.md) ran collapsed 2.2× faster than direct (53.9 s
     * vs 117.7 s, both with the tokenization materialized) at a modeled
     * block-volume ratio of only 1.134. Below 1.05 the corpus is
     * effectively clone-free and the collapse's group-agg + membership

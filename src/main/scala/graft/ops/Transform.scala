@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expr.To24Hour.to_24h
@@ -117,20 +116,19 @@ object Transform {
     * observable quirk, SURVEY §2.9.2). O(1) per row, no shuffle — the right
     * call at 100 TB.
     *
-    * Deterministic mode: row_number over a stable key minus 1 — needed when
-    * downstream wants reproducible ids (oracle checks). Single-partition
-    * window: only for dimension-scale data. */
+    * Deterministic mode: dense 0..n-1 ids in (cad_event_number,
+    * call_sign_dispatch_id) order through [[graft.operators.Ids.denseIds]]
+    * — needed when downstream wants reproducible ids (oracle checks). */
   def addSurrogateKeys(df: DataFrame, deterministic: Boolean = false): DataFrame = {
     val skCols = Seq("dim_care_spd_id", "dim_co_response_id", "dim_cad_event_id",
       "dim_location_id", "dim_call_sign_id")
-    val id =
-      if (deterministic)
-        row_number().over(
-          Window.orderBy("cad_event_number", "call_sign_dispatch_id")).cast("long") - 1
-      else monotonically_increasing_id()
     // One shared id column, aliased five ways — same observable result as the
     // reference's five monotonically_increasing_id calls, evaluated once.
-    val withId = df.withColumn("__sk", id)
+    val withId =
+      if (deterministic)
+        graft.operators.Ids.denseIds(df, Seq("cad_event_number", "call_sign_dispatch_id"),
+          idName = "__sk")
+      else df.withColumn("__sk", monotonically_increasing_id())
     skCols.foldLeft(withId)((acc, c) => acc.withColumn(c, col("__sk"))).drop("__sk")
   }
 

@@ -291,7 +291,7 @@ object CorpusQueries {
     * The (doc_id, w1, w2) projection is materialized ONCE and shared by its
     * three consumers (c2, c1, scoring): measured at the 100× tier,
     * recomputing the explode per consumer costs 29.7 s vs 12.7 s
-    * materialized (tools/ProbeNgramLm; SCALING.md) — at 100 TB that is
+    * materialized (SCALING.md) — at 100 TB that is
     * three corpus scans vs one. Checkpoint mode follows the
     * [[graft.operators.Components]] snapshot policy (VERDICT r8 #6):
     * RELIABLE checkpoint when `sparkContext.getCheckpointDir` is set — the
@@ -341,7 +341,7 @@ object CorpusQueries {
     // bigram through the generator). Zipping the two slices builds them
     // once per doc and the generator emits 2-word structs — strictly less
     // row traffic (measured neutral at the decade tier, where the
-    // snapshot/shuffle costs dominate — tools/ProbeCappedLm).
+    // snapshot/shuffle costs dominate — SCALING.md).
     val bi0 = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -425,7 +425,7 @@ object CorpusQueries {
     // bigram through the generator). Zipping the two slices builds them
     // once per doc and the generator emits 2-word structs — strictly less
     // row traffic (measured neutral at the decade tier, where the
-    // snapshot/shuffle costs dominate — tools/ProbeCappedLm).
+    // snapshot/shuffle costs dominate — SCALING.md).
     val bi0 = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)

@@ -106,8 +106,8 @@ object RelationalQueries {
       .orderBy("n_name")
   }
 
-  /** J2 on the BUCKETED layout — the zero-Exchange plan ProbeBucketed
-    * demonstrated at the 1000× tier (25 s vs 67 s raw at 600 M rows), now a
+  /** J2 on the BUCKETED layout — the zero-Exchange plan SCALING.md
+    * measured at the 1000× tier (25 s vs 67 s raw at 600 M rows), now a
     * declared, oracle-checked query. Once per (session, dataset, data
     * fingerprint) the two fact-side tables are written bucketed+sorted on
     * the join key to a unique temp dir (the amortized-IVF pattern: layout

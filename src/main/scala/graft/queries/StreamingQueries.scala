@@ -68,11 +68,9 @@ object StreamingQueries {
     * windows) should flip this to
     * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
     * (spillable off-heap state, incremental snapshots; classloads and runs
-    * hash-identical here — see [[graft.tools.ProbeStateStore]] and the
-    * SCALING.md table for the measured cost of each at two tiers).
-    * Overridable per run via SPARK_GRAFT_STATESTORE=rocksdb|default; with
-    * no override the choice is INPUT-SIZED: sources past ~64 MB of parquet
-    * flip to RocksDB automatically. The flip threshold comes from a real
+    * hash-identical here — see the SCALING.md table for the measured cost
+    * of each at two tiers). The choice is INPUT-SIZED: sources past ~64 MB
+    * of parquet flip to RocksDB automatically. The flip threshold comes from a real
     * failure, not taste — the 100× full-surface sweep OOM'd
     * q_stream_sessions at a 183 MB source because EVERY HDFSBacked state
     * partition lives in the same local-mode heap (partition count cannot
@@ -86,26 +84,11 @@ object StreamingQueries {
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Manual provider override: the SPARK_GRAFT_STATESTORE env var (per
-    * run) or the `spark.graft.statestore` system property (settable
-    * in-JVM — what [[graft.tools.ProbeStateStore]]'s A/B legs use, since
-    * the declared entries re-choose the session conf per stream and a
-    * conf set by the probe would be silently overwritten). `None` =
-    * no override, apply the automatic trigger. */
-  private def manualProvider: Option[Option[String]] =
-    sys.env.get("SPARK_GRAFT_STATESTORE")
-      .orElse(sys.props.get("spark.graft.statestore"))
-      .map {
-        case "rocksdb" => Some(RocksDbProvider)
-        case _ => None
-      }
-
   private def stateStoreProvider(s: SparkSession, d: String,
-                                 sources: Seq[String]): Option[String] =
-    manualProvider.getOrElse {
-      val bytes = graft.util.InputSize.maxBytes(s, sources.map(t => s"$d/$t"))
-      if (bytes > (64L << 20)) Some(RocksDbProvider) else None
-    }
+                                 sources: Seq[String]): Option[String] = {
+    val bytes = graft.util.InputSize.maxBytes(s, sources.map(t => s"$d/$t"))
+    if (bytes > (64L << 20)) Some(RocksDbProvider) else None
+  }
 
   /** Estimated join-state ROWS at or under this bound keep the on-heap
     * provider for the stream-stream join entry. Why rows, not bytes
@@ -113,7 +96,7 @@ object StreamingQueries {
     * input row inside the watermark horizon — under the single-batch
     * AvailableNow pin that is every filtered source row — so its state is
     * row-shaped, and the generic 64 MB byte trigger over-fires by the
-    * parquet compression ratio. Measured (SCALING.md r13, ProbeStreamJoin
+    * parquet compression ratio. Measured (SCALING.md r13,
     * A/B): at the 100× tier (10 M source rows, 183 MB) the byte trigger
     * forced RocksDB at 25.3 s while on-heap runs 13.4 s — and on-heap
     * completes at the DEFAULT 8 GiB heap, not just the sweep's 64 GiB.
@@ -124,23 +107,21 @@ object StreamingQueries {
   val JoinStateMaxRows: Long = 32L * 1000 * 1000
 
   /** Row-estimated provider choice for the stream-stream join
-    * ([[streamClickAttribution]]): same env override contract as
-    * [[stateStoreProvider]], but the automatic trigger counts parquet
-    * footer rows ([[graft.util.InputSize.parquetRows]]) instead of bytes. */
+    * ([[streamClickAttribution]]): like [[stateStoreProvider]], but the
+    * trigger counts parquet footer rows
+    * ([[graft.util.InputSize.parquetRows]]) instead of bytes. */
   private[queries] def joinStateProvider(s: SparkSession, d: String,
-                                         sources: Seq[String]): Option[String] =
-    manualProvider.getOrElse {
-      // cap: any count at or past the bound routes identically, so the
-      // footer walk stops there instead of serially opening every footer
-      // of a huge directory (ADVICE r13 #3)
-      val rows = graft.util.InputSize.maxParquetRows(
-        s, sources.map(t => s"$d/$t"), cap = JoinStateMaxRows + 1)
-      if (rows > JoinStateMaxRows) Some(RocksDbProvider) else None
-    }
+                                         sources: Seq[String]): Option[String] = {
+    // cap: any count at or past the bound routes identically, so the
+    // footer walk stops there instead of serially opening every footer
+    // of a huge directory (ADVICE r13 #3)
+    val rows = graft.util.InputSize.maxParquetRows(
+      s, sources.map(t => s"$d/$t"), cap = JoinStateMaxRows + 1)
+    if (rows > JoinStateMaxRows) Some(RocksDbProvider) else None
+  }
 
   /** State-partition count for the declared streaming entries (VERDICT
-    * r10 #5, measured in [[graft.tools.ProbeStreamParts]] + SCALING.md
-    * r11): a stateful operator materializes one state-store instance PER
+    * r10 #5, measured in SCALING.md r11): a stateful operator materializes one state-store instance PER
     * shuffle partition PER micro-batch — store init, delta WAL file and
     * snapshot each — so on entry-sized state (hundreds of keys at every
     * bench tier) 32 partitions is 4× the fixed I/O of 8 for zero
@@ -148,25 +129,23 @@ object StreamingQueries {
     * batch from the session conf; results are partition-count-invariant
     * (the driver hash gate re-proves it every round). SIZING, not
     * semantics: a real 100 TB stream carries millions of keys and wants
-    * hundreds of state partitions — override per run via
-    * SPARK_GRAFT_STREAM_PARTS, exactly like the seq-pack shard knob.
+    * hundreds of state partitions, which the input-sized rule below gives.
     * Sizing through [[graft.util.InputSize]] over the stream's own
     * sources; an unresolvable path reports Long.MaxValue → 200 partitions
     * (the large-input plan — fail-safe, like the provider flip). */
   private def streamStateParts(s: SparkSession, d: String,
-                               sources: Seq[String]): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", {
-      // input-sized default (the fixed default 8 was measured right for
-      // entry-sized state at the bench tiers, but the 100x full-surface
-      // sweep OOM'd q_stream_sessions: 8 partitions over a 183 MB source
-      // concentrates ~25x more per-task session state than the tier the
-      // default was sized on). One state partition per ~8 MB of source
-      // parquet, floor 8 (the measured fixed-cost optimum), cap 200:
-      // sf0.1 (2 MB) -> 8 unchanged; 100x (183 MB) -> 22; 1000x -> 200.
-      val bytes = graft.util.InputSize.maxBytes(s, sources.map(t => s"$d/$t"))
-      val perPart = bytes / (8L << 20) // MaxValue/8Mi still > 200 — no overflow
-      math.min(200L, math.max(8L, perPart)).toString
-    })
+                               sources: Seq[String]): String = {
+    // input-sized (the fixed default 8 was measured right for entry-sized
+    // state at the bench tiers, but the 100x full-surface sweep OOM'd
+    // q_stream_sessions: 8 partitions over a 183 MB source concentrates
+    // ~25x more per-task session state than the tier the default was sized
+    // on). One state partition per ~8 MB of source parquet, floor 8 (the
+    // measured fixed-cost optimum), cap 200: sf0.1 (2 MB) -> 8 unchanged;
+    // 100x (183 MB) -> 22; 1000x -> 200.
+    val bytes = graft.util.InputSize.maxBytes(s, sources.map(t => s"$d/$t"))
+    val perPart = bytes / (8L << 20) // MaxValue/8Mi still > 200 — no overflow
+    math.min(200L, math.max(8L, perPart)).toString
+  }
 
   /** Run a streaming aggregate to a parquet sink under AvailableNow and
     * read the sink back. Sink and checkpoint live in temp dirs registered
@@ -224,7 +203,7 @@ object StreamingQueries {
     // each snapshotted by every maintenance pass until then, taxing
     // whatever runs next (measured: hourly 1.96 → 1.63 s, join 3.83 →
     // 2.96 s median-of-5, and it removes the multi-second drift across
-    // back-to-back runs — tools/ProbeStreamKnobs). Correctness-neutral: a
+    // back-to-back runs — OPTIMIZATION_r15.md). Correctness-neutral: a
     // provider unloaded under a live query is reloaded from its checkpoint
     // on the next batch; this query has terminated.
     org.apache.spark.sql.GraftBridge.unloadAllStateStores()

@@ -26,7 +26,7 @@ object SweepTier {
     // drop the sort under a top-k limit — counted timings UNDERSTATE
     // map-only queries. Kept opt-in so sweep artifacts stay comparable
     // with earlier rounds' counted runs; new map-only SCALING numbers
-    // should use --force (or ProbeForce).
+    // should use --force.
     val force = args.drop(3).contains("--force")
     val subset = args.drop(3).toSet - "--force"
     val spark = graft.util.Sessions.build("graft-sweep",

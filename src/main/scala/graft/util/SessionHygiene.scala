@@ -37,15 +37,4 @@ object SessionHygiene {
     spark.catalog.clearCache()
     if (gc) System.gc()
   }
-
-  /** One observability line for profiling session-state accumulation. */
-  def stateLine(spark: SparkSession, tag: String): String = {
-    val sc = spark.sparkContext
-    val storage = sc.getRDDStorageInfo
-    val rt = Runtime.getRuntime
-    s"""{"tag":"$tag","persistent_rdds":${sc.getPersistentRDDs.size},""" +
-      s""""storage_rdds":${storage.length},""" +
-      s""""storage_mem":${storage.map(_.memSize).sum},""" +
-      s""""heap_used":${rt.totalMemory - rt.freeMemory}}"""
-  }
 }

@@ -23,6 +23,5 @@ object GraftBridge {
     * the next batch (correctness unaffected; graft's declared entries run
     * one stream at a time anyway). */
   def unloadAllStateStores(): Unit =
-    if (!sys.env.get("SPARK_GRAFT_KEEP_PROVIDERS").contains("1"))
-      execution.streaming.state.StateStore.unloadAll()
+    execution.streaming.state.StateStore.unloadAll()
 }

@@ -86,29 +86,12 @@ class StreamingQueriesSpec extends AnyFunSuite {
     // provider, never the on-heap one
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    assume(sys.env.get("SPARK_GRAFT_STATESTORE").isEmpty)
     // sf-tier events are far under JoinStateMaxRows: on-heap
     assert(StreamingQueries.joinStateProvider(spark, sf,
       Seq("events.parquet")).isEmpty)
     // unresolvable source: fail-safe direction
     assert(StreamingQueries.joinStateProvider(spark, "/nonexistent/graft",
       Seq("events.parquet")).contains(rocks))
-    // the in-JVM override channel (what ProbeStateStore's A/B legs use)
-    // beats the automatic trigger in both directions.
-    // NOTE (ADVICE r13 #4): this mutates the JVM-GLOBAL system property
-    // and restores it in `finally` — safe because suites run sequentially
-    // under Test/fork; if forked-PARALLEL suites are ever enabled, the
-    // override could leak into a concurrently running streaming test
-    // (provider choice only, never output values) and this block needs an
-    // injectable override seam instead
-    try {
-      sys.props("spark.graft.statestore") = "rocksdb"
-      assert(StreamingQueries.joinStateProvider(spark, sf,
-        Seq("events.parquet")).contains(rocks))
-      sys.props("spark.graft.statestore") = "default"
-      assert(StreamingQueries.joinStateProvider(spark, "/nonexistent/graft",
-        Seq("events.parquet")).isEmpty)
-    } finally sys.props.remove("spark.graft.statestore")
   }
 
   test("stream_neardup equals the batch band-dedup twin (engine-vs-engine)") {

@@ -6,7 +6,8 @@
 # can proceed concurrently). Compile first: `sbt -batch compile`.
 #
 # Env: SPARK_DRIVER_MEM (default 8g; derived big tiers need 64g),
-#      SPARK_GRAFT_CPUS and the other SPARK_GRAFT_* vars pass through,
+#      SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR, SPARK_GRAFT_QUERIES and
+#      SPARK_GRAFT_BENCH_REF (the only SPARK_GRAFT_* vars) pass through,
 #      SPARK_LOCAL_DIR (default /tmp) — point shuffle/spill scratch at the
 #      volume with the most free space for big-tier sweeps, so a tier
 #      failure measures the ENGINE, not the box's disk layout (VERDICT r7
